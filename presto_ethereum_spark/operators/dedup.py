@@ -803,7 +803,7 @@ def minhash_calibration(
     # threshold 0 = every overlapping pair: the same shared both-sides
     # capped self-join as the truth pipeline (ReuseExchange materializes
     # the postings once), unfiltered
-    tp = jaccard_truth_pairs(df, 0, text_col, id_col, 3, max_df)
+    tp = jaccard_truth_pairs(df, 0, text_col, id_col, SHINGLE_N, max_df)
     j = ag.join(tp, ["id_a", "id_b"], "left").select(
         "n_agree",
         F.coalesce(

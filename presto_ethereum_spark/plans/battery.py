@@ -1609,31 +1609,19 @@ def stream_u256_balance_upsert(spark: SparkSession, sf: str) -> DataFrame:
     algebra, graded against an independent DuckDB HUGEINT recompute on
     values up to within 2^16 of uint256-max.  The graded run streams the
     log fixture as THREE pmod-staged micro-batches
-    (maxFilesPerTrigger=1), a real multi-generation merge."""
-    import shutil
-    import tempfile
-
+    (streaming/drain.staged_source), a real multi-generation merge."""
     from presto_ethereum_spark.sources.decode import erc20_transfer_deltas_u256
     from presto_ethereum_spark.streaming.chain import (
         run_balance_upsert,
         u256_state_spec,
     )
+    from presto_ethereum_spark.streaming.drain import staged_source, workdir
 
     logs = spark.read.parquet(str(ETH / "u256_logs.parquet"))
-    schema = logs.schema
     zero = "0x" + "0" * 40
-    root = tempfile.mkdtemp(prefix="u256_stream_")
-    try:
-        for i in range(3):
-            logs.where(F.pmod(F.col("blocknumber"), F.lit(3)) == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{root}/in/part_{i}")
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{root}/in")
-        )
+    with workdir("u256_stream_") as root:
+        parts = [logs.where(F.pmod(F.col("blocknumber"), 3) == i) for i in range(3)]
+        src = staged_source(f"{root}/in", parts)
         return run_balance_upsert(
             spark,
             str(ETH / "u256_logs.parquet"),
@@ -1643,8 +1631,6 @@ def stream_u256_balance_upsert(spark: SparkSession, sf: str) -> DataFrame:
             ),
             state_spec=u256_state_spec(),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @q("stream_u256_balance_restart", _U256_STREAM_ORACLE)
@@ -8640,8 +8626,7 @@ def stream_manifest_sink(spark: SparkSession, sf: str) -> DataFrame:
     read back via the manifests — it must equal the input exactly (a lost
     task, double-published batch, or orphaned staging file would all break
     the hash)."""
-    import tempfile
-
+    from presto_ethereum_spark.streaming.drain import drain, workdir
     from presto_ethereum_spark.streaming.events import _events_source
     from presto_ethereum_spark.streaming.sink import (
         JsonlManifestDataSource,
@@ -8649,24 +8634,17 @@ def stream_manifest_sink(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     spark.dataSource.register(JsonlManifestDataSource)
-    out = tempfile.mkdtemp(prefix="manifest_sink_")
-    q = (
-        _events_source(spark, sf)
-        .select("event_id", "user_id", "t_us", "event_type")
-        .writeStream.format("jsonl_manifest")
-        .option("path", out)
-        .option("checkpointLocation", f"{out}/_chk")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = read_manifested(
-        spark, out, "event_id long, user_id long, t_us long, event_type string"
-    ).localCheckpoint(eager=True)
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
-    return got
+    with workdir("manifest_sink_") as out:
+        drain(
+            _events_source(spark, sf)
+            .select("event_id", "user_id", "t_us", "event_type")
+            .writeStream.format("jsonl_manifest")
+            .option("path", out),
+            f"{out}/_chk",
+        )
+        return read_manifested(
+            spark, out, "event_id long, user_id long, t_us long, event_type string"
+        ).localCheckpoint(eager=True)
 
 
 @q(
@@ -9097,15 +9075,13 @@ def stream_erc20_tail(spark: SparkSession, sf: str) -> DataFrame:
     block range (the bulk path, no block bodies, no receipts), decoded by
     the same per-log rules as the batch scan.  Aggregated per token; must
     equal the golden batch aggregation exactly (%.6e canonicalization
-    absorbs fp summation order, as in eth_erc20_movement).  r11: graded
-    as THREE rate-limited micro-batches (drain_runs=3 x 800 blocks) under
-    the incremental-batch schedule — each availableNow run is one bulk
-    getLogs + a state-store resume from the shared checkpoint."""
-    import shutil
-    import tempfile
-    import uuid
-
+    absorbs fp summation order, as in eth_erc20_movement).  Graded as
+    THREE rate-limited micro-batches (3 drains x 800 blocks) under the
+    incremental-batch schedule of streaming/drain.drain — each
+    availableNow run is one bulk getLogs + a state-store resume from the
+    shared checkpoint."""
     from presto_ethereum_spark.streaming.chain import EthereumStreamDataSource
+    from presto_ethereum_spark.streaming.drain import drain_to_memory
 
     spark.dataSource.register(EthereumStreamDataSource)
     stream = (
@@ -9119,36 +9095,7 @@ def stream_erc20_tail(spark: SparkSession, sf: str) -> DataFrame:
         F.format_string("%.6e", F.sum("erc20_value")).alias("total_value"),
         F.count("*").alias("n_transfers"),
     )
-    chk = tempfile.mkdtemp(prefix="erc20_tail_chk_")
-    try:
-        out = None
-        for i in range(3):
-            # one sink per drain; keep the last non-empty settled table
-            # (an exhausted-source drain fires zero triggers and would
-            # otherwise clobber the state with its empty view) — the
-            # run_chain_gas_buckets drain discipline
-            sink = f"stream_erc20_{uuid.uuid4().hex[:8]}_{i}"
-            q_ = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", chk)
-                .start()
-            )
-            q_.awaitTermination()
-            cur = spark.table(sink).localCheckpoint(eager=True)
-            spark.catalog.dropTempView(sink)
-            if cur.take(1):
-                out = cur
-        if out is None:
-            # all drains settled empty (empty/exhausted source): hand back
-            # an empty frame with the agg schema, not None — the
-            # run_chain_gas_buckets fallback discipline
-            out = spark.createDataFrame([], agg.schema)
-        return out
-    finally:
-        shutil.rmtree(chk, ignore_errors=True)
+    return drain_to_memory(agg, "stream_erc20", "complete", runs=3)
 
 
 @q("doc_bpe_train", None)

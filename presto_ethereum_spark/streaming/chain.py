@@ -54,6 +54,13 @@ from pyspark.sql.types import (
 
 from presto_ethereum_spark.schemas import SCHEMAS
 from presto_ethereum_spark.sources.rpc import make_transport
+from presto_ethereum_spark.streaming.drain import (
+    block_ranges,
+    drain_to_memory,
+    staged_source,
+    upsert_generations,
+    workdir,
+)
 
 # Raw-log wire shape (streaming-only table=log; NOT in the reference's
 # 3-table metadata, so kept out of the SCHEMAS registry): one row per
@@ -295,17 +302,13 @@ def run_chain_gas_buckets(
     domain); gas sums go through DECIMAL so the streamed result equals the
     batch aggregation exactly under any micro-batch partitioning.
 
-    ``drain_runs`` > 1 applies the incremental-batch schedule (see
-    run_balance_upsert): Spark wraps Python stream sources lacking
-    SupportsTriggerAvailableNow so one availableNow run drains exactly one
-    rate-limited micro-batch; re-running against the SAME checkpoint
-    resumes both the source offset AND the aggregation's state store —
-    each drain is a genuine stateful-query restart-recovery, and the
-    settled table must still equal the batch aggregation."""
-    import tempfile
-    import shutil
-    import uuid
-
+    ``drain_runs`` > 1 applies the incremental-batch schedule of
+    streaming/drain.drain: one rate-limited micro-batch per availableNow
+    run, each resuming both the source offset and the aggregation's state
+    store from the shared checkpoint, so every drain is a genuine
+    stateful-query restart-recovery and the settled table must still
+    equal the batch aggregation.  Drains past the end of the source are
+    no-ops."""
     from pyspark.sql import functions as F
 
     spark.dataSource.register(EthereumStreamDataSource)
@@ -330,42 +333,7 @@ def run_chain_gas_buckets(
             F.max("block_gaslimit").alias("max_gas_limit"),
         )
     )
-    chk = tempfile.mkdtemp(prefix="chain_gas_chk_")
-    try:
-        out = None
-        for i in range(max(1, drain_runs)):
-            # one sink PER drain: a drain that finds the source exhausted
-            # fires zero triggers and leaves ITS table empty — reusing one
-            # name would let that empty table clobber the settled state
-            # (complete mode rewrites the registered view per query run).
-            # Keeping the last non-empty output makes drain_runs
-            # over-provisionable.
-            sink = f"stream_chain_gas_{uuid.uuid4().hex[:8]}_{i}"
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", chk)
-                .start()
-            )
-            q.awaitTermination()
-            # pin the result and DROP the uuid-named sink table: repeated
-            # calls in one session (bench loops, retries) must not
-            # accumulate cached result tables
-            cur = spark.table(sink).localCheckpoint(eager=True)
-            spark.catalog.dropTempView(sink)
-            if cur.take(1):
-                out = cur
-        if out is None:
-            out = spark.createDataFrame(
-                [],
-                "bucket int, n_blocks long, total_gas_used double,"
-                " max_gas_limit long",
-            )
-        return out
-    finally:
-        shutil.rmtree(chk, ignore_errors=True)
+    return drain_to_memory(agg, "stream_chain_gas", "complete", drain_runs)
 
 
 def rescan_reorged(spark, ingested, options: dict, depth: int = 64):
@@ -435,31 +403,26 @@ def run_balance_upsert(
     addition is commutative/associative, so the settled state equals the
     batch ledger under ANY micro-batch split (the stream_ewma_user
     argument, applied to foreachBatch state instead of operator state).
-    Generations follow run_foreachbatch_upsert's compact-and-swap contract:
-    a replayed batch_id merges from the last generation that is not its
-    own output, so the write is idempotent per (state, batch) pair.
+    Generations follow streaming/drain.GenerationChain: a replayed
+    batch_id merges from the last generation that is not its own output,
+    so the write is idempotent per (state, batch) pair.
     With the default tempdir root that idempotency is scoped to
     WITHIN-RUN foreachBatch retries (the one-shot semantics).  Pass
     ``state_root`` for DURABLE RESTART-SAFE runs: the streaming
     checkpoint and the generation chain both live under that root and
     survive the call — a later call with the same root recovers the
-    committed generations from disk (only ``_SUCCESS``-marked ones, so a
-    torn write from a hard kill is invisible) and Spark's checkpoint
-    resumes the source offset, so a killed-and-restarted pipeline
-    settles to the same ledger as an uninterrupted one
-    (run_balance_restart / stream_balance_restart grade exactly that).
+    committed generations from disk and Spark's checkpoint resumes the
+    source offset, so a killed-and-restarted pipeline settles to the same
+    ledger as an uninterrupted one (run_balance_restart /
+    stream_balance_restart grade exactly that).
     Durable mode REQUIRES a caller-supplied ``source`` whose file paths
     are stable across calls — combining ``state_root`` with the default
     re-staged input raises ValueError (the overwrite re-stage would mint
     new part-file names and replay every block on resume).
-    The checkpoint and the state generations live under ONE root on
-    purpose: they must be retained or lost together — restoring the
-    checkpoint without the generations (or vice versa) double-counts or
-    drops batches, the standard Spark state/checkpoint pairing contract.
 
     ``split_ranges`` > 1 re-stages the snapshot into that many
     block-range parquet files and streams them one per micro-batch
-    (maxFilesPerTrigger=1), so the graded entry exercises a REAL
+    (streaming/drain.staged_source), so the graded entry exercises a REAL
     multi-batch merge, not a single-batch degenerate run.  ``source``
     overrides the stream entirely — e.g. the ethereum-stream source's
     raw-log table straight off an RPC transport — with ``deltas_fn``
@@ -467,6 +430,7 @@ def run_balance_upsert(
     raw-block batches; pass erc20_transfer_deltas_from_logs for wire-log
     batches).  Everything downstream of the decode is shape-identical,
     which is what makes the standing pipeline source-agnostic.
+    ``drain_runs`` is the incremental-batch schedule of streaming/drain.drain.
 
     Scale: per-batch work is distributed DataFrame compute keyed on
     (token, holder); state is one row per funded pair; the driver only
@@ -475,10 +439,6 @@ def run_balance_upsert(
     canonical digit string (the balance family's bridge-stable
     contract)."""
     import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
 
     from presto_ethereum_spark.sources.decode import erc20_transfer_deltas
 
@@ -490,122 +450,41 @@ def run_balance_upsert(
     # dirname() return '' and fail with an opaque empty-path error.
     path = os.path.abspath(path)
     if state_root is not None and source is None:
-        # ADVICE r12 #2: the default path RE-STAGES the split ranges into
-        # {root}/input with mode('overwrite'); every write mints new random
-        # part-file names, so a resumed call with the same root would see
-        # every range as UNSEEN in the file-source checkpoint and replay
-        # all blocks on top of the recovered generation chain — a silently
-        # double-counted ledger.  Durable mode therefore requires a
-        # caller-managed source whose file paths are stable across calls
-        # (run_balance_restart stages exactly that).
+        # The default path RE-STAGES the split ranges with
+        # mode('overwrite'); every write mints new random part-file names,
+        # so a resumed call with the same root would see every range as
+        # UNSEEN in the file-source checkpoint and replay all blocks on
+        # top of the recovered generation chain — a silently
+        # double-counted ledger.
         raise ValueError(
             "state_root requires a caller-supplied `source` with stable "
             "file paths; the default re-staged input would replay every "
             "block on resume (see run_balance_restart for the safe shape)"
         )
-    if state_root is not None:
-        import glob
-        import re
-
-        root = os.path.abspath(state_root)
-        os.makedirs(root, exist_ok=True)
-        # recover the committed generation chain: _SUCCESS-marked gen dirs
-        # in batch-id order (batch ids keep increasing across restarts —
-        # the checkpoint continues the numbering)
-        found = []
-        for g in glob.glob(f"{root}/gen_*"):
-            m = re.match(r".*gen_(\d+)$", g)
-            if m and os.path.exists(f"{g}/_SUCCESS"):
-                found.append((int(m.group(1)), g))
-        gens = [g for _, g in sorted(found)]
-    else:
-        root = tempfile.mkdtemp(prefix="balance_state_")
-        gens = []
-    try:
+    with workdir("balance_state_", keep=state_root) as root:
         if source is None:
             chain = spark.read.parquet(path)
-            schema = chain.schema
             if split_ranges > 1:
-                import math
-
-                # Half-open ranges anchored at min(number): a chain dump
-                # numbered from 0 (genesis) keeps its first block — the
-                # old ``i*step + 1`` lower bound silently dropped block 0
-                # and produced an empty stream when max(number) == 0.
-                mn, hi = chain.agg(
-                    F.min("number"), F.max("number")
-                ).collect()[0]
-                mn, hi = mn or 0, hi or 0
-                step = max(1, math.ceil((hi - mn + 1) / split_ranges))
-                src_dir = f"{root}/input"
-                for i in range(split_ranges):
-                    lo = mn + i * step
-                    part = chain.where(
-                        (F.col("number") >= lo) & (F.col("number") < lo + step)
-                    )
-                    part.coalesce(1).write.mode("overwrite").parquet(
-                        f"{src_dir}/range_{i}"
-                    )
-                source = (
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .option("recursiveFileLookup", "true")
-                    .parquet(src_dir)
+                source = staged_source(
+                    f"{root}/input", block_ranges(chain, "number", split_ranges)
                 )
             else:
                 source = (
-                    spark.readStream.schema(schema)
+                    spark.readStream.schema(chain.schema)
                     .option("pathGlobFilter", os.path.basename(path))
                     .parquet(os.path.dirname(path))
                 )
-
         spec = state_spec or decimal_state_spec()
-
-        def merge_batch(batch_df, batch_id: int) -> None:
-            out = f"{root}/gen_{batch_id}"
-            prior = [g for g in gens if g != out]
-            part = (
-                deltas_fn(batch_df)
-                .groupBy("token_address", "holder")
-                .agg(*spec["partial"]())
-            )
-            if prior:
-                prev = batch_df.sparkSession.read.parquet(prior[-1])
-                part = (
-                    prev.unionByName(part)
-                    .groupBy("token_address", "holder")
-                    .agg(*spec["merge"]())
-                )
-            part.write.mode("overwrite").parquet(out)
-            if out not in gens:
-                gens.append(out)
-
-        # drain_runs > 1 is the INCREMENTAL-BATCH schedule for rate-limited
-        # sources: Spark wraps a Python stream source that lacks
-        # SupportsTriggerAvailableNow in AvailableNowDataStreamWrapper,
-        # which captures latestOffset ONCE at query start — so a reader
-        # that rate-limits to max_blocks_per_batch drains exactly one
-        # micro-batch per availableNow run.  Re-running against the SAME
-        # checkpoint resumes from the committed offset (a real
-        # restart-recovery per run) until the source is exhausted; each
-        # run's batch merges into the same generation chain.
-        for _ in range(max(1, drain_runs)):
-            q = (
-                source.writeStream.foreachBatch(merge_batch)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{root}/_chk")
-                .start()
-            )
-            q.awaitTermination()
-        if not gens:
-            return spark.createDataFrame([], spec["empty_schema"])
-        return (
-            spec["readout"](spark.read.parquet(gens[-1]))
-            .localCheckpoint(eager=True)
+        key = ("token_address", "holder")
+        return upsert_generations(
+            source,
+            root,
+            partial=lambda b: deltas_fn(b).groupBy(*key).agg(*spec["partial"]()),
+            merge=lambda u: u.groupBy(*key).agg(*spec["merge"]()),
+            empty_schema=spec["empty_schema"],
+            readout=spec["readout"],
+            runs=drain_runs,
         )
-    finally:
-        if state_root is None:
-            shutil.rmtree(root, ignore_errors=True)
 
 
 def run_balance_restart(
@@ -617,7 +496,7 @@ def run_balance_restart(
     state_spec: dict | None = None,
     block_col: str = "number",
 ):
-    """GENUINE KILL-AND-RESUME for the balance pipeline (VERDICT r11 #2):
+    """GENUINE KILL-AND-RESUME for the balance pipeline:
 
     1. stage the first ``kill_after`` block-range files, run the pipeline
        with a durable ``state_root`` until availableNow drains them;
@@ -639,69 +518,34 @@ def run_balance_restart(
     adds zero steady-state cost (recovery is one directory listing).
 
     ``deltas_fn``/``state_spec`` plug the same pluggable state algebra as
-    run_balance_upsert (VERDICT r12 #3: the u256 family gets its own
-    restart gate by passing erc20_transfer_deltas_u256 + u256_state_spec);
+    run_balance_upsert (the u256 family gets its own restart gate by
+    passing erc20_transfer_deltas_u256 + u256_state_spec);
     ``block_col`` names the range-staging column (``number`` for the
     nested chain shape, ``blocknumber`` for wire-log inputs)."""
-    import math
     import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
 
     if not 1 <= kill_after < split_ranges:
         raise ValueError("kill_after must leave work for the resumed run")
     path = os.path.abspath(path)
-    root = tempfile.mkdtemp(prefix="balance_restart_")
-    try:
-        chain = spark.read.parquet(path)
-        schema = chain.schema
-        mn, hi = chain.agg(F.min(block_col), F.max(block_col)).collect()[0]
-        mn, hi = mn or 0, hi or 0
-        step = max(1, math.ceil((hi - mn + 1) / split_ranges))
+    with workdir("balance_restart_") as root:
+        parts = block_ranges(spark.read.parquet(path), block_col, split_ranges)
 
-        def stage(i: int) -> None:
-            lo = mn + i * step
-            chain.where(
-                (F.col(block_col) >= lo) & (F.col(block_col) < lo + step)
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{root}/input/range_{i}"
+        def run(source):
+            return run_balance_upsert(
+                spark,
+                path,
+                source=source,
+                state_root=f"{root}/state",
+                deltas_fn=deltas_fn,
+                state_spec=state_spec,
             )
 
-        def src():
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .option("recursiveFileLookup", "true")
-                .parquet(f"{root}/input")
-            )
-
-        state = f"{root}/state"
-        for i in range(kill_after):
-            stage(i)
-        run_balance_upsert(
-            spark,
-            path,
-            source=src(),
-            state_root=state,
-            deltas_fn=deltas_fn,
-            state_spec=state_spec,
-        )
+        run(staged_source(f"{root}/input", parts[:kill_after]))
         # the kill: first run's query + driver state are gone here; only
         # {state}/_chk and {state}/gen_* survive on disk
-        for i in range(kill_after, split_ranges):
-            stage(i)
-        return run_balance_upsert(
-            spark,
-            path,
-            source=src(),
-            state_root=state,
-            deltas_fn=deltas_fn,
-            state_spec=state_spec,
+        return run(
+            staged_source(f"{root}/input", parts[kill_after:], first=kill_after)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def decimal_state_spec() -> dict:

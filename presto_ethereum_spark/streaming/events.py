@@ -14,8 +14,6 @@ drop deterministically.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -26,6 +24,13 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from presto_ethereum_spark.streaming.drain import (
+    drain_to_memory,
+    upsert_generations,
+    workdir,
+)
+
 
 def _events_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream over ``events.parquet`` with the schema taken from the
@@ -170,31 +175,11 @@ def sessionized_stream(
     )
 
 
-def _settle_to_memory(
-    spark: SparkSession, stream_df: DataFrame, prefix: str, output_mode: str
-) -> DataFrame:
-    """Run a stream to completion (availableNow) into a uuid-named memory
-    sink, pin the settled result, and DROP the sink — repeated calls in one
-    session (bench loops, retries) must not accumulate cached tables."""
-    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
-
-
 def run_sessionized(
     spark: SparkSession, sf_dir: str, gap_us: int = 3_600_000_000
 ) -> DataFrame:
-    return _settle_to_memory(
-        spark, sessionized_stream(spark, sf_dir, gap_us), "stream_sessions", "append"
+    return drain_to_memory(
+        sessionized_stream(spark, sf_dir, gap_us), "stream_sessions", "append"
     )
 
 
@@ -203,9 +188,8 @@ def run_windowed_counts(
 ) -> DataFrame:
     """Run the stream to completion (availableNow) into a memory sink and
     return the settled result."""
-    return _settle_to_memory(
-        spark, windowed_counts_stream(spark, sf_dir, window),
-        "stream_counts", "complete",
+    return drain_to_memory(
+        windowed_counts_stream(spark, sf_dir, window), "stream_counts", "complete"
     )
 
 
@@ -225,9 +209,7 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _settle_to_memory(
-        spark, dedup_stream(spark, sf_dir), "stream_dedup", "append"
-    )
+    return drain_to_memory(dedup_stream(spark, sf_dir), "stream_dedup", "append")
 
 
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -256,8 +238,8 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _settle_to_memory(
-        spark, stream_static_join(spark, sf_dir), "stream_enrich", "complete"
+    return drain_to_memory(
+        stream_static_join(spark, sf_dir), "stream_enrich", "complete"
     )
 
 
@@ -319,8 +301,8 @@ def stream_stream_join(
 
 
 def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _settle_to_memory(
-        spark, stream_stream_join(spark, sf_dir), "stream_ss_join", "append"
+    return drain_to_memory(
+        stream_stream_join(spark, sf_dir), "stream_ss_join", "append"
     )
 
 
@@ -349,8 +331,8 @@ def ivf_ingest_stream(
 
 
 def run_ivf_ingest(spark: SparkSession, sf_dir: str, centroids: list) -> DataFrame:
-    return _settle_to_memory(
-        spark, ivf_ingest_stream(spark, sf_dir, centroids), "stream_ivf", "complete"
+    return drain_to_memory(
+        ivf_ingest_stream(spark, sf_dir, centroids), "stream_ivf", "complete"
     )
 
 
@@ -389,10 +371,10 @@ def run_foreachbatch_upsert(
     body becomes a single ``MERGE INTO``; the batch-side reduction and
     restart semantics are identical.
 
-    Re-running a batch overwrites its own generation and re-merges the
-    same input — the write is idempotent per (state, batch) pair, which is
-    exactly the contract foreachBatch requires for exactly-once results
-    under retries.
+    Generations follow streaming/drain.GenerationChain: a re-run batch
+    overwrites its own generation and re-merges the same input, so the
+    write is idempotent per (state, batch) pair — the contract foreachBatch
+    requires for exactly-once results under retries.
 
     Scale: all heavy work (per-batch reduce, state merge) is distributed
     DataFrame compute; the driver only sequences generations.  State size
@@ -406,56 +388,29 @@ def run_foreachbatch_upsert(
     event_id / value) — tests use a multi-file source to force the
     multi-batch merge path.
     """
-    import shutil
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="upsert_state_")
-    gens: list[str] = []
+    def latest(df: DataFrame) -> DataFrame:
+        return _latest_per_key(df.select("user_id", "t_us", "event_id", "value"))
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = f"{root}/gen_{batch_id}"
-        # foreachBatch may re-invoke a batch_id after a failure between the
-        # function returning and the offset-log commit: merge from the last
-        # generation that is NOT this batch's own output (reading and
-        # overwriting the same path in one job is both illegal and wrong —
-        # it would double-apply the batch)
-        prior = [g for g in gens if g != out]
-        compact = _latest_per_key(
-            batch_df.select("user_id", "t_us", "event_id", "value")
-        )
-        if prior:
-            prev = batch_df.sparkSession.read.parquet(prior[-1]).select(
+    def remerge(union: DataFrame) -> DataFrame:
+        return latest(
+            union.select(
                 "user_id",
                 F.col("last_t_us").alias("t_us"),
                 F.col("last_event_id").alias("event_id"),
                 F.col("last_value").alias("value"),
             )
-            compact = _latest_per_key(prev.unionByName(
-                compact.select(
-                    "user_id",
-                    F.col("last_t_us").alias("t_us"),
-                    F.col("last_event_id").alias("event_id"),
-                    F.col("last_value").alias("value"),
-                )
-            ))
-        compact.write.mode("overwrite").parquet(out)
-        if out not in gens:
-            gens.append(out)
+        )
 
-    q = (
-        (source if source is not None else _events_source(spark, sf_dir))
-        .writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{root}/_chk")
-        .start()
-    )
-    q.awaitTermination()
-    if not gens:
-        schema = "user_id long, last_t_us long, last_event_id long, last_value double"
-        return spark.createDataFrame([], schema)
-    settled = spark.read.parquet(gens[-1]).localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
-    return settled
+    with workdir("upsert_state_") as root:
+        return upsert_generations(
+            source if source is not None else _events_source(spark, sf_dir),
+            root,
+            partial=latest,
+            merge=remerge,
+            empty_schema="user_id long, last_t_us long, last_event_id long,"
+            " last_value double",
+        )
 
 
 def run_trending_topk(
@@ -517,8 +472,8 @@ def quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _settle_to_memory(
-        spark, quality_gate_stream(spark, sf_dir), "stream_quality", "complete"
+    return drain_to_memory(
+        quality_gate_stream(spark, sf_dir), "stream_quality", "complete"
     )
 
 
@@ -557,11 +512,8 @@ def windowed_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _settle_to_memory(
-        spark,
-        windowed_distinct_stream(spark, sf_dir),
-        "stream_wdistinct",
-        "complete",
+    return drain_to_memory(
+        windowed_distinct_stream(spark, sf_dir), "stream_wdistinct", "complete"
     )
 
 
@@ -677,8 +629,8 @@ def run_kmv_distinct(
     """Settle the KMV stream and keep the last emit per window (max of the
     monotone n_events counter — one row per window whatever the
     micro-batch split)."""
-    settled = _settle_to_memory(
-        spark, kmv_distinct_stream(spark, sf_dir, k, source), "stream_kmv", "append"
+    settled = drain_to_memory(
+        kmv_distinct_stream(spark, sf_dir, k, source), "stream_kmv", "append"
     )
     w = Window.partitionBy("window_start").orderBy(F.desc("n_events"))
     return (
@@ -817,11 +769,8 @@ def run_value_histogram(
 ) -> DataFrame:
     """Settle the histogram stream; keep the last emit per window (max of
     the monotone n_events counter)."""
-    settled = _settle_to_memory(
-        spark,
-        value_histogram_stream(spark, sf_dir, source),
-        "stream_vhist",
-        "append",
+    settled = drain_to_memory(
+        value_histogram_stream(spark, sf_dir, source), "stream_vhist", "append"
     )
     w = Window.partitionBy("window_start").orderBy(F.desc("n_events"))
     return (
@@ -953,11 +902,8 @@ def run_heavy_hitters(
     linear scan — at 100 TB the verify prices one pass over the closed
     window's slice (a log replay in a real deployment), never a full
     groupBy of the corpus."""
-    settled = _settle_to_memory(
-        spark,
-        heavy_hitters_stream(spark, sf_dir, k, source),
-        "stream_mg",
-        "append",
+    settled = drain_to_memory(
+        heavy_hitters_stream(spark, sf_dir, k, source), "stream_mg", "append"
     )
     w = Window.partitionBy("window_start")
     last = settled.withColumn("_mx", F.max("n_events").over(w)).where(
@@ -1052,11 +998,8 @@ def run_session_window(
     append mode would hold back sessions ending inside the last watermark
     window (measured: 903 of 906 sessions at sf0.001) — complete mode
     emits the full settled state, making the result batch-equal."""
-    return _settle_to_memory(
-        spark,
-        session_window_stream(spark, sf_dir, source),
-        "stream_swin",
-        "complete",
+    return drain_to_memory(
+        session_window_stream(spark, sf_dir, source), "stream_swin", "complete"
     )
 
 
@@ -1172,8 +1115,8 @@ def run_ewma(
     """Settle the EWMA stream, keep the last emit per user (max of the
     monotone n_seen counter), and derive the graded double from the exact
     BIGINT rational — the identical division sequence the oracle runs."""
-    settled = _settle_to_memory(
-        spark, ewma_stream(spark, sf_dir, source), "stream_ewma", "append"
+    settled = drain_to_memory(
+        ewma_stream(spark, sf_dir, source), "stream_ewma", "append"
     )
     w = Window.partitionBy("key").orderBy(F.desc("n_seen"))
     return (
@@ -1297,8 +1240,8 @@ def run_funnel(
     source: DataFrame | None = None,
 ) -> DataFrame:
     """Settle the funnel stream and keep the last emit per user."""
-    settled = _settle_to_memory(
-        spark, funnel_stream(spark, sf_dir, source), "stream_funnel", "append"
+    settled = drain_to_memory(
+        funnel_stream(spark, sf_dir, source), "stream_funnel", "append"
     )
     w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))
     return (

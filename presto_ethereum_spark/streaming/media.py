@@ -13,16 +13,17 @@ per-row pure, so the settled result is split-invariant by construction
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
+
+from presto_ethereum_spark.streaming.drain import drain, staged_source, workdir
 
 
 def run_png_ingest(spark, path: str, splits: int = 3):
     """Stream ``path`` (an images parquet with media_id + png columns) as
-    ``splits`` micro-batches (maxFilesPerTrigger=1), decode each batch
-    for real, append to a parquet result, return the settled stats table.
+    ``splits`` micro-batches (streaming/drain.staged_source), decode each
+    batch for real, append to a parquet result, return the settled stats
+    table.
 
     Scale: per-batch work is the embarrassingly parallel decode kernel;
     the append sink is partition-local writes (no shuffle at all — the
@@ -30,42 +31,27 @@ def run_png_ingest(spark, path: str, splits: int = 3):
     from presto_ethereum_spark.operators.multimodal import png_decode_stats
 
     path = os.path.abspath(path)
-    root = tempfile.mkdtemp(prefix="png_ingest_")
-    try:
+    with workdir("png_ingest_") as root:
         imgs = spark.read.parquet(path)
-        schema = imgs.schema
         n = imgs.count()
         # split on pmod(media_id, splits) — a total partitioning of the
         # id domain, so sparse / non-dense / negative ids all land in
         # exactly one staged batch (id-RANGE staging silently dropped
         # ids outside [0, splits*step) when ids weren't dense 0..n-1)
-        staged = 0
-        for i in range(splits):
-            part = imgs.where(F.pmod(F.col("media_id"), F.lit(splits)) == i)
-            staged += part.count()
-            part.coalesce(1).write.mode("overwrite").parquet(
-                f"{root}/input/part_{i}"
-            )
+        parts = [
+            imgs.where(F.pmod(F.col("media_id"), F.lit(splits)) == i)
+            for i in range(splits)
+        ]
+        staged = sum(part.count() for part in parts)
         if staged != n:
             raise AssertionError(
                 f"staging lost rows: staged {staged} of {n}"
             )
+        source = staged_source(f"{root}/input", parts)
         out = f"{root}/decoded"
 
         def decode_batch(batch_df, batch_id: int) -> None:
             png_decode_stats(batch_df).write.mode("append").parquet(out)
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{root}/input")
-            .writeStream.foreachBatch(decode_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{root}/_chk")
-            .start()
-        )
-        q.awaitTermination()
+        drain(source.writeStream.foreachBatch(decode_batch), f"{root}/_chk")
         return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

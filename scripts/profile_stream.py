@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Event-log profile of ONE battery entry (VERDICT r13 #4): where does the
+"""Event-log profile of ONE battery entry: where does the
 wall time of a streaming entry actually go — executed jobs, or the gaps
 between them (micro-batch planning, Python-source offset negotiation,
 checkpoint commits, driver-side sequencing)?
@@ -95,6 +95,9 @@ def main() -> None:
                 jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
         elif k == "SparkListenerStageCompleted":
             si = ev["Stage Info"]
+            # the warmup run's stages predate t0 and must not rank
+            if si.get("Submission Time", 0) < t0_wall_ms:
+                continue
             stages[si["Stage ID"]] = {
                 "stage": si["Stage ID"],
                 "name": si["Stage Name"][:80],
@@ -131,7 +134,10 @@ def main() -> None:
         "jobs_covered_s": round(covered / 1000, 3),
         "job_span_s": round(span, 3),
         "inter_job_gap_s": round(max(0.0, span - covered / 1000), 3),
-        "pre_first_job_s": None,  # wall includes build; first job ts below
+        # driver-side build before the profiled run's first job
+        "pre_first_job_s": (
+            round((done[0]["t0"] - t0_wall_ms) / 1000, 3) if done else None
+        ),
         "top_gaps": gaps[:15],
         "slowest_jobs": sorted(done, key=lambda j: -j["ms"])[:15],
         "slowest_stages": sorted(stages.values(), key=lambda s: -s["ms"])[:10],

@@ -278,6 +278,58 @@ class TestForeachBatchUpsert:
                for r in out.collect()}
         assert got == {1: (20, 103, 9.0), 2: (5, 101, 2.0), 3: (7, 104, 4.0)}
 
+    def test_empty_source_leaves_no_state_dir(self, spark, tmp_path):
+        """A drain that runs no batch still removes its scratch state root:
+        the empty-result return must not skip the cleanup."""
+        import os
+        import tempfile
+
+        from presto_ethereum_spark.streaming.events import (
+            run_foreachbatch_upsert,
+        )
+
+        def state_dirs():
+            return {
+                d for d in os.listdir(tempfile.gettempdir())
+                if d.startswith("upsert_state_")
+            }
+
+        src = tmp_path / "empty"
+        src.mkdir()
+        stream = spark.readStream.schema(
+            "user_id long, t_us long, event_id long, value double"
+        ).parquet(str(src))
+        before = state_dirs()
+        out = run_foreachbatch_upsert(spark, sf_dir="", source=stream)
+        assert out.count() == 0
+        assert out.columns == [
+            "user_id", "last_t_us", "last_event_id", "last_value"
+        ]
+        assert state_dirs() - before == set()
+
+    def test_replayed_batch_id_merges_once(self, spark, tmp_path):
+        """foreachBatch may re-invoke a batch id after a failure before the
+        offset commit.  Batches 0, 1, 1 over an additive state must settle
+        to the two-batch sum: the replay merges from generation 0, not
+        from its own first output."""
+        from presto_ethereum_spark.streaming.drain import GenerationChain
+
+        def partial(df):
+            return df.groupBy("k").agg(F.sum("v").cast("long").alias("v"))
+
+        chain = GenerationChain(str(tmp_path / "state"), partial, partial)
+        b0 = spark.createDataFrame([("a", 1), ("b", 10)], "k string, v long")
+        b1 = spark.createDataFrame([("a", 2), ("c", 5)], "k string, v long")
+        for batch_df, batch_id in ((b0, 0), (b1, 1), (b1, 1)):
+            chain(batch_df, batch_id)
+        assert [g.rsplit("/", 1)[1] for g in chain.gens] == ["gen_0", "gen_1"]
+        got = dict(map(tuple, spark.read.parquet(chain.gens[-1]).collect()))
+        assert got == {"a": 3, "b": 10, "c": 5}
+        # a fresh chain over the same root recovers both committed
+        # generations in batch-id order
+        again = GenerationChain(str(tmp_path / "state"), partial, partial)
+        assert again.gens == chain.gens
+
 
 class TestJsonlManifestSink:
     def test_commit_manifests_and_readback(self, spark, tmp_path):
@@ -1721,6 +1773,27 @@ class TestDrainOverProvisioning:
             )
         )
         assert got == want and len(got) > 0
+
+    def test_sourceless_drain_returns_typed_empty_table(self, spark, tmp_path):
+        """A chain with no block past genesis streams nothing (the source
+        starts at block 1): every drain settles empty, and the result is
+        the first drain's memory table, typed exactly like a non-empty
+        settled table."""
+        from presto_ethereum_spark.streaming.chain import run_chain_gas_buckets
+
+        chain = spark.read.parquet(CHAIN)
+        path = str(tmp_path / "genesis_only.parquet")
+        chain.limit(1).withColumn("number", F.lit(0).cast("long")).write.parquet(
+            path
+        )
+        full = run_chain_gas_buckets(spark, CHAIN)
+        assert full.columns == [
+            "bucket", "n_blocks", "total_gas_used", "max_gas_limit"
+        ]
+        for runs in (1, 3):
+            got = run_chain_gas_buckets(spark, path, drain_runs=runs)
+            assert got.count() == 0
+            assert got.dtypes == full.dtypes
 
 class TestBalanceRestartR13:
     """r13 additions to the balance-restart family (placed in their own
